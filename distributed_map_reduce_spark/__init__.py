@@ -17,6 +17,8 @@ Layout
                   /root/reference/src/mr/worker.go:280-281)
 - ``plans``       explain/plan-inspection helpers
 - ``streaming``   Structured Streaming twin of the batch event queries
+- ``worker_daemon`` the executors' Python worker daemon (``session``
+                  installs it for local masters)
 - ``registry``    single source of truth: query name -> (Spark builder,
                   DuckDB oracle SQL) consumed by ``__spark_entry__.py``,
                   bench.py and the pytest parity suite

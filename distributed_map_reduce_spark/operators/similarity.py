@@ -173,7 +173,8 @@ def _ivf_fit_centers(emb: DataFrame) -> list[list[float]]:
     Deterministic: seeded sample, first-K init, fixed rounds."""
     import numpy as np
 
-    vecs = emb.select(F.col("embedding").cast("array<double>").alias("v"))
+    v = F.col("embedding").cast("array<double>").alias("v")
+    vecs = emb.select(v)
     sample = np.array(
         [
             r["v"]
@@ -190,11 +191,11 @@ def _ivf_fit_centers(emb: DataFrame) -> list[list[float]]:
     # declaring the input empty; fail loudly only on a truly empty
     # frame; cycle the rows deterministically up to K otherwise
     # (duplicate centers are harmless for argmin assignment — first
-    # position wins ties).
+    # position wins ties). The retry orders by vec_id before its LIMIT:
+    # an unordered LIMIT picks (and returns) rows by partition layout.
     if len(sample) == 0:
-        sample = np.array(
-            [r["v"] for r in vecs.limit(IVF_FIT_CAP).collect()]
-        )
+        first = emb.orderBy("vec_id").limit(IVF_FIT_CAP).select(v)
+        sample = np.array([r["v"] for r in first.collect()])
     if len(sample) == 0:
         raise ValueError(
             "_ivf_fit_centers: the embeddings frame has no rows — "

@@ -14,15 +14,53 @@ deployment and merely *also* work on local[32]):
 - UTC session timezone: timestamp semantics must not depend on the host.
 - shuffle.partitions is a *default*, not a schema property; at cluster
   scale it should be ~2-3x total cores, and AQE coalesces the excess.
+- Python worker daemon: ``spark.python.daemon.module`` is
+  ``distributed_map_reduce_spark.worker_daemon`` for every Python task
+  (MR, ``mapInPandas``/``mapInArrow``, pandas UDFs, ``foreachBatch``).
+  Spark's stock daemon makes each task's ``importlib.invalidate_caches()``
+  re-read the zip directories of ``pyspark.zip`` and the spark-core jar;
+  the engine's daemon re-reads an archive only when it changed. Measured
+  on a 4-vCPU host (CPython 3.11.7, local[4]): that call went from
+  ~185 ms to 0.15 ms of CPU, and a warm 64-task identity job from
+  170-186 ms to 12-15 ms of Python-worker CPU per task. It is a fixed
+  engine setting, applied only where the workers can import the package
+  (:func:`_worker_daemon_conf`).
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+WORKER_DAEMON_MODULE = "distributed_map_reduce_spark.worker_daemon"
+
+
+def _worker_daemon_conf(master: str) -> dict[str, str]:
+    """``spark.python.daemon.module`` for masters whose Python workers can
+    import this package, else nothing (Spark's stock daemon).
+
+    Only ``local``/``local[...]`` masters qualify: their daemon starts in
+    the driver's cwd with the driver's ``PYTHONPATH``, and the package is
+    importable there when its parent directory is the cwd, is on
+    ``PYTHONPATH`` or is a site-packages directory. A ``sys.path.insert``
+    in the driver does not reach the workers, and the executors of a
+    cluster or ``local-cluster`` master run elsewhere; a daemon module
+    they cannot import would fail every Python task.
+    """
+    if master != "local" and not master.startswith("local["):
+        return {}
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    roots = [
+        os.getcwd(),
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+    ]
+    if os.path.realpath(parent) not in {os.path.realpath(r) for r in roots if r}:
+        return {}
+    return {"spark.python.daemon.module": WORKER_DAEMON_MODULE}
 
 
 def get_spark(
@@ -74,6 +112,6 @@ def get_spark(
         # local mode: don't spam the console
         .config("spark.ui.showConsoleProgress", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_worker_daemon_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -126,6 +126,25 @@ def test_ivf_fit_handles_short_sample(spark):
         _ivf_fit_centers(empty)
 
 
+def test_ivf_fit_empty_sample_fallback_is_deterministic(spark, monkeypatch):
+    """When the Bernoulli sample comes back empty, the unsampled retry
+    takes its rows in vec_id order, so the fit does not depend on how
+    the frame is partitioned (ADVICE r17)."""
+    from distributed_map_reduce_spark.operators.similarity import (
+        IVF_K,
+        _ivf_fit_centers,
+    )
+
+    tiny = spark.createDataFrame(
+        [(i, [float(i * i % 23), float(i % 7)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    monkeypatch.setattr(type(tiny), "sample", lambda self, **kw: self.limit(0))
+    runs = [_ivf_fit_centers(tiny.repartition(n)) for n in (3, 5)]
+    assert len(runs[0]) == IVF_K
+    assert runs[0] == runs[1]
+
+
 def test_q130_update_log_max_equals_final_state(spark, tmp_path):
     """q130's r17 drain rides UPDATE mode + a max(tf) reduce of the
     update log. Pin the equivalence argument on the adversarial case:

@@ -24,6 +24,7 @@ GATE_TESTS = [
     "tests/test_registry_order.py",
     "tests/test_entry_contract.py",
     "tests/test_docs_inventory.py",
+    "tests/test_worker_daemon.py",
 ]
 
 
